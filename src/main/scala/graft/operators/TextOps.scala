@@ -1293,10 +1293,12 @@ object TextOps {
       val s = mb.sparkSession
       val mbDocs = mb.select(col("doc_id"), col("lang"), col("sh"), col("sk"))
         .persist()
-      // persist WITHOUT an eager count (the r14 perplexity lesson): the
-      // first action through here is probeClassify's own groups.count(),
-      // which pulls mbDocs into cache as a side effect; a dedicated
-      // count() was one more fixed-cost job per trigger for nothing
+      // persist WITHOUT an eager count (the r14 perplexity lesson): with
+      // AQE off (the streaming child session) probeClassifyAndIndex skips
+      // its groups.count(), so mbDocs materializes lazily inside the
+      // fold's single write action, under the BlockManager's per-block
+      // cache locks; a dedicated count() would be one more fixed-cost job
+      // per trigger for nothing
       val corpusIdx = corpusIdx0
       val seen =
         if (new java.io.File(seenDir).exists())

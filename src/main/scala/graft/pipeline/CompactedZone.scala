@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 
 import graft.operators.EtlOps
 
@@ -14,8 +18,9 @@ import graft.operators.EtlOps
   * arrival is tiny. This module maintains a COMPACTED zone — the
   * latest-wins resolution of all snapshots seen so far — that advances
   * incrementally: each new snapshot partition is merged by touching ONLY
-  *   (a) that snapshot's raw-zone partition (partition-pruned JSON scan:
-  *       `extracted_at = <snap>` never lists other snapshot dirs), and
+  *   (a) that snapshot's raw-zone partition (a JSON scan of the
+  *       `extracted_at=<snap>` dirs only — no other snapshot dir is
+  *       listed or opened), and
   *   (b) the compacted buckets holding updated keys.
   *
   * Layout: parquet partitioned by `bucket = pmod(id, NumBuckets)` — the
@@ -30,10 +35,16 @@ import graft.operators.EtlOps
   * bucket on HDFS/posix; an object-store deployment would commit via
   * manifest instead. A type-WIDENING rewrite commits at ZONE granularity
   * (one directory swap) because its buckets are not mutually
-  * schema-compatible mid-rewrite (see [[mergeUpdates]]). `_GRAFT_MERGED` records which snapshots are already
-  * folded in (temp+rename, same torn-write defense as the cursor manifest),
-  * and a source fingerprint invalidates the whole zone when the fixture
-  * parquet is regenerated (ADVICE r3 rule, same as [[RawZone]]).
+  * schema-compatible mid-rewrite (see [[mergeUpdates]]). Zone metadata:
+  * `_GRAFT_MERGED` records which snapshots are already folded in
+  * (append-only, one line per snapshot — see [[readState]]),
+  * `_GRAFT_SCHEMA` the zone's physical schema (see [[SchemaFile]]), and a
+  * source fingerprint invalidates the whole zone when the fixture parquet
+  * is regenerated (ADVICE r3 rule, same as [[RawZone]]).
+  *
+  * Cost per arrival: three Spark jobs — the touched-bucket scan, and the
+  * merge write's shuffle and write stages. No job infers a schema, and the
+  * merge shuffles once.
   *
   * Equivalence contract: after every snapshot is merged, the compacted
   * zone's projection is row-identical to the full recompute
@@ -52,27 +63,47 @@ object CompactedZone {
 
   private val StateFile = "_GRAFT_MERGED"
 
-  private def readState(dir: java.io.File): Seq[String] = {
-    val f = new java.io.File(dir, StateFile)
-    if (!f.isFile) Seq.empty
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split('\n').map(_.trim).filter(_.nonEmpty).toSeq
+  /** The snapshots already folded in. `_GRAFT_MERGED` is APPEND-ONLY: one
+    * newline-terminated line per merged snapshot, so an arrival commits
+    * with an append instead of a temp file renamed over the old one (on
+    * ext4 mounted with `discard`, a rename over an existing file costs tens
+    * of ms, an append microseconds). A crash mid-append leaves a final line
+    * without its newline: that snapshot counts as NOT merged, and the
+    * fragment is cut off here so the next append starts a clean line. The
+    * snapshot then merges again, which latest-wins makes idempotent.
+    */
+  private def readState(dir: File): Seq[String] = {
+    val f = new File(dir, StateFile)
+    if (!f.isFile) return Seq.empty
+    val bytes = Files.readAllBytes(f.toPath)
+    val end = bytes.lastIndexOf('\n'.toByte) + 1
+    if (end < bytes.length) {
+      val ch = java.nio.channels.FileChannel.open(f.toPath, StandardOpenOption.WRITE)
+      try ch.truncate(end.toLong) finally ch.close()
+    }
+    new String(bytes, 0, end, "UTF-8").split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  private def writeState(dir: java.io.File, merged: Seq[String]): Unit = {
-    val tmp = new java.io.File(dir, StateFile + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      merged.mkString("", "\n", "\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath, new java.io.File(dir, StateFile).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def appendState(dir: File, snap: String): Unit =
+    Files.write(new File(dir, StateFile).toPath, (snap + "\n").getBytes("UTF-8"),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+
+  /** Commit a metadata file whole: write a temp sibling, then rename it
+    * over the old one atomically. For metadata that changes rarely
+    * ([[RenamesFile]], [[DropsFile]], [[SchemaFile]]).
+    */
+  private def commitFile(dir: File, name: String, content: String): Unit = {
+    val tmp = new File(dir, name + ".tmp")
+    Files.write(tmp.toPath, content.getBytes("UTF-8"))
+    Files.move(tmp.toPath, new File(dir, name).toPath,
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Snapshot values (`extracted_at` partition dirs) present in the raw
     * zone, ascending — arrival order for the merge loop.
     */
   private def rawSnapshots(rawDir: String): Seq[String] = {
-    val root = new java.io.File(rawDir)
+    val root = new File(rawDir)
     Option(root.listFiles()).toSeq.flatten
       .filter(f => f.isDirectory && f.getName.startsWith("repo="))
       .flatMap(repo => Option(repo.listFiles()).toSeq.flatten)
@@ -81,14 +112,17 @@ object CompactedZone {
       .distinct.sorted
   }
 
-  /** ONE snapshot's runs, flattened to upsert rows — the partition-pruned
-    * incremental read (the equality filter on the partition column prunes
-    * at directory level; `CompactionSpec` asserts via `input_file_name`
-    * that no other snapshot's files are opened).
+  /** ONE snapshot's runs, flattened to upsert rows — the incremental read:
+    * the path glob lists only that snapshot's directories (the raw zone
+    * root stays the partition base, so `repo`/`extracted_at` are still
+    * discovered), and the equality filter on the partition column keeps
+    * the scan to them (`CompactionSpec` asserts via `input_file_name` that
+    * no other snapshot's files are opened).
     */
   private[graft] def snapshotUpdates(spark: SparkSession, rawDir: String,
       snap: String): DataFrame =
-    spark.read.schema(RawZone.pageSchema).json(rawDir)
+    spark.read.schema(RawZone.pageSchema).option("basePath", rawDir)
+      .json(s"$rawDir/repo=*/extracted_at=$snap")
       .filter(col("extracted_at") === snap)
       .select(col("extracted_at"), explode(col("workflow_runs")).as("run"))
       .select(
@@ -112,17 +146,17 @@ object CompactedZone {
     * its physical names forever, arriving batches translate logical →
     * physical before the merge, and reads translate physical → logical
     * after the scan ([[readZone]]). The map lives in `_GRAFT_RENAMES`
-    * (one `physical=logical` line per renamed column, temp+atomic-rename
-    * committed like [[StateFile]]) and is independent of the data files —
+    * (one `physical=logical` line per renamed column, committed by
+    * [[commitFile]]) and is independent of the data files —
     * a crash between map update and bucket swap leaves a consistent zone
     * either way, because the mapping changes only NAMES.
     */
   private val RenamesFile = "_GRAFT_RENAMES"
 
   private[graft] def readRenames(dir: String): Map[String, String] = {
-    val f = new java.io.File(dir, RenamesFile)
+    val f = new File(dir, RenamesFile)
     if (!f.isFile) Map.empty
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    else new String(Files.readAllBytes(f.toPath), "UTF-8")
       .split('\n').map(_.trim).filter(_.nonEmpty)
       .map { line =>
         val Array(phys, logical) = line.split("=", 2)
@@ -130,21 +164,14 @@ object CompactedZone {
       }.toMap
   }
 
-  private def writeRenames(dir: java.io.File, map: Map[String, String]): Unit = {
-    val tmp = new java.io.File(dir, RenamesFile + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      map.toSeq.sorted.map { case (p, l) => s"$p=$l" }
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, RenamesFile).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeRenames(dir: File, map: Map[String, String]): Unit =
+    commitFile(dir, RenamesFile,
+      map.toSeq.sorted.map { case (p, l) => s"$p=$l" }.mkString("", "\n", "\n"))
 
   /** COLUMN-DROP metadata (r15, VERDICT r14 item 6 — the matrix notch past
     * r14's rename): PHYSICAL column names dropped from the logical schema,
-    * one per line in `_GRAFT_DROPS` (same temp+atomic-rename commit as
-    * [[RenamesFile]]). A declared drop is metadata-only — files keep the
+    * one per line in `_GRAFT_DROPS` (committed like [[RenamesFile]]). A
+    * declared drop is metadata-only — files keep the
     * column's bytes forever, [[readZone]] masks it, and the physical name
     * is TOMBSTONED: a later batch re-introducing the same logical name gets
     * a fresh physical name ([[mergeUpdates]]' remap), so history reads null
@@ -156,27 +183,69 @@ object CompactedZone {
   private val DropsFile = "_GRAFT_DROPS"
 
   private[graft] def readDrops(dir: String): Set[String] = {
-    val f = new java.io.File(dir, DropsFile)
+    val f = new File(dir, DropsFile)
     if (!f.isFile) Set.empty
-    else new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    else new String(Files.readAllBytes(f.toPath), "UTF-8")
       .split('\n').map(_.trim).filter(_.nonEmpty).toSet
   }
 
-  private def writeDrops(dir: java.io.File, drops: Set[String]): Unit = {
-    val tmp = new java.io.File(dir, DropsFile + ".tmp")
-    java.nio.file.Files.write(tmp.toPath,
-      drops.toSeq.sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp.toPath,
-      new java.io.File(dir, DropsFile).toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def writeDrops(dir: File, drops: Set[String]): Unit =
+    commitFile(dir, DropsFile, drops.toSeq.sorted.mkString("", "\n", "\n"))
+
+  /** PHYSICAL-SCHEMA metadata: `_GRAFT_SCHEMA` holds, as Spark's JSON form
+    * of a StructType, the schema a `mergeSchema` scan of the zone infers —
+    * every column any bucket file carries, at the zone's type, all
+    * nullable, the `bucket` partition column last. Every read goes through
+    * it ([[scanZone]]), so neither a merge nor a read pays a footer-merging
+    * job. A merge rewrites it only when it changes the schema, and BEFORE
+    * the buckets move: a crash in between leaves a schema naming a column
+    * no file carries yet (it reads null), never a file carrying a column
+    * the schema lacks (which the next base read would silently drop). A
+    * zone written before the file existed falls back to the inferring scan
+    * and gets the file on its next merge.
+    */
+  private val SchemaFile = "_GRAFT_SCHEMA"
+
+  private[graft] def readSchema(dir: String): Option[StructType] = {
+    val f = new File(dir, SchemaFile)
+    if (!f.isFile) None
+    else Some(DataType.fromJson(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      .asInstanceOf[StructType])
   }
 
-  /** Read the zone under its LOGICAL schema: the mergeSchema scan (files
-    * may be schema-heterogeneous after additive evolution) with dropped
-    * physical columns masked and the column-mapping renames applied as ONE
-    * atomic projection. Every consumer reads through this so a rename or
-    * drop is visible everywhere at once.
+  /** The zone's physical scan under `schema`, or — for a zone without a
+    * committed schema — the `mergeSchema` scan (bucket files may be
+    * schema-heterogeneous after additive evolution; the union of all file
+    * schemas is the zone's schema, Delta/Iceberg's additive rule).
+    */
+  private def scanZone(spark: SparkSession, dir: String,
+      schema: Option[StructType]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(dir)
+    case None => spark.read.option("mergeSchema", "true").parquet(dir)
+  }
+
+  /** The schema a `mergeSchema` scan infers once a merge's output, of
+    * schema `written` (partition column included), lands over a zone of
+    * schema `zone`: existing columns keep their place and type (`widened`
+    * ones turn long), new columns append in written order, the partition
+    * column stays last, and every column is nullable, as file scans
+    * report it.
+    */
+  private def nextSchema(zone: Option[StructType], written: StructType,
+      widened: Set[String]): StructType = {
+    val kept = zone.toSeq.flatMap(_.fields).filter(_.name != "bucket")
+      .map(f => if (widened(f.name)) f.copy(dataType = LongType) else f)
+    val added = written.fields
+      .filter(f => f.name != "bucket" && !kept.exists(_.name == f.name))
+    StructType((kept ++ added).map(_.copy(nullable = true)) :+
+      StructField("bucket", IntegerType))
+  }
+
+  /** Read the zone under its LOGICAL schema: the physical scan under the
+    * committed schema ([[scanZone]]) with dropped physical columns masked
+    * and the column-mapping renames applied as ONE atomic projection.
+    * Every consumer reads through this so a rename or drop is visible
+    * everywhere at once.
     *
     * Atomic projection, not a fold of `withColumnRenamed` (ADVICE r14
     * medium): a reachable chained mapping like {a→b, b→x} (declare b→x,
@@ -189,10 +258,36 @@ object CompactedZone {
   private[graft] def readZone(spark: SparkSession, dir: String): DataFrame = {
     val renames = readRenames(dir)
     val drops = readDrops(dir)
-    val scan = spark.read.option("mergeSchema", "true").parquet(dir)
+    val scan = scanZone(spark, dir, readSchema(dir))
     scan.select(scan.schema.fieldNames.toSeq
       .filterNot(drops.contains)
       .map(p => col(p).as(renames.getOrElse(p, p))): _*)
+  }
+
+  /** The buckets a batch's keys land in, ascending, from ONE shuffle-free
+    * job: each task folds its partition's bucket ids into a 64-bit mask,
+    * and the driver ORs the per-partition masks. The collect is one Long
+    * per partition; the guard fails loudly if `numBuckets` outgrows the
+    * mask, and a task fails on a bucket id outside `[0, numBuckets)`.
+    */
+  private[graft] def touchedBuckets(updates: DataFrame,
+      numBuckets: Int = NumBuckets): Seq[Int] = {
+    if (numBuckets > java.lang.Long.SIZE)
+      throw new IllegalStateException(s"CompactedZone: $numBuckets buckets do " +
+        s"not fit the ${java.lang.Long.SIZE}-bit touched-bucket mask; widen its " +
+        "encoding before raising NumBuckets")
+    val masks = updates.select(col("bucket")).rdd.mapPartitions { rows =>
+      var mask = 0L
+      rows.foreach { r =>
+        val b = if (r.isNullAt(0)) -1 else r.getInt(0)
+        if (b < 0 || b >= numBuckets) throw new IllegalStateException(
+          s"CompactedZone: bucket id $b outside [0, $numBuckets)")
+        mask |= 1L << b
+      }
+      Iterator.single(mask)
+    }.collect()
+    val all = masks.foldLeft(0L)(_ | _)
+    (0 until numBuckets).filter(b => (all >>> b & 1L) == 1L)
   }
 
   /** Merge an ARBITRARY batch of upsert rows (the [[snapshotUpdates]]
@@ -232,19 +327,24 @@ object CompactedZone {
       renames: Map[String, String] = Map.empty,
       drops: Seq[String] = Seq.empty,
       allowWidening: Boolean = true): Seq[Int] = {
-    val zone = new java.io.File(dir)
+    val zone = new File(dir)
     zone.mkdirs()
     // resolve + persist the column mapping FIRST: the merge below runs
     // entirely on PHYSICAL names, so a declared rename/drop is one metadata
     // write and a batch-side projection — never a data rewrite
     val existing = readRenames(dir)
     val dropped0 = readDrops(dir)
-    val zoneFiles = Option(zone.listFiles()).toSeq.flatten
-      .exists(f => f.isDirectory && f.getName.startsWith("bucket="))
-    val physSchema: Seq[String] =
-      if (zoneFiles) spark.read.option("mergeSchema", "true")
-        .parquet(dir).schema.fieldNames.toSeq
-      else Seq.empty
+    val existingBuckets = Option(zone.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .map(_.getName.stripPrefix("bucket=").toInt)
+    val zoneFiles = existingBuckets.nonEmpty
+    // the zone's physical schema: committed metadata; inferred (one footer
+    // job) only for a zone written before the schema file existed
+    val stored = readSchema(dir)
+    val zoneSchema: Option[StructType] =
+      if (!zoneFiles) None
+      else stored.orElse(Some(scanZone(spark, dir, None).schema))
+    val physSchema: Seq[String] = zoneSchema.toSeq.flatMap(_.fieldNames)
     var mapping: Map[String, String] = existing
     var droppedPhys: Set[String] = dropped0
     if (renames.nonEmpty || drops.nonEmpty) {
@@ -308,14 +408,10 @@ object CompactedZone {
     if (droppedPhys != dropped0) writeDrops(zone, droppedPhys)
     val updates = updates0.select(batchCols.map { case (l, p) =>
       col(l).as(p) }: _*)
-    val existingBuckets = Option(zone.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .map(_.getName.stripPrefix("bucket=").toInt)
 
-    // the buckets this snapshot's keys land in — a ≤ NumBuckets-row driver
-    // list; everything outside it is untouched by the merge
-    val touchedByKeys: Seq[Int] = updates.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    // the buckets this snapshot's keys land in; everything outside them is
+    // untouched by the merge
+    val touchedByKeys: Seq[Int] = touchedBuckets(updates)
     if (touchedByKeys.isEmpty) return Seq.empty // empty batch: nothing to rewrite
 
     // TYPE-WIDENING EVOLUTION (r13, one notch past r12's additive rule):
@@ -332,26 +428,20 @@ object CompactedZone {
     // touched set. ANY other retype (narrowing, cross-family) is rejected
     // loudly — that is a zone rebuild decision, never a silent merge
     // (the Delta/Iceberg stance). Pinned in CompactionSpec.
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val widened: Set[String] =
-      if (existingBuckets.isEmpty) Set.empty
-      else {
-        val zoneSchema = spark.read.option("mergeSchema", "true").parquet(dir).schema
-        zoneSchema.fields.flatMap { zf =>
-          updates.schema.fields.find(_.name == zf.name).flatMap { uf =>
-            (zf.dataType, uf.dataType) match {
-              case (a, b) if a == b => None
-              case (IntegerType, LongType) => Some(zf.name) // widen the zone
-              case (LongType, IntegerType) => None // older-schema batch: coerces up
-              case (a, b) => throw new IllegalStateException(
-                s"CompactedZone: column '${zf.name}' retype $a -> $b is not a " +
-                  "merge — only int->long widening evolves in place; " +
-                  "narrowing or cross-family retypes are a zone REBUILD and " +
-                  "must be an explicit operator decision, never a silent merge")
-            }
-          }
-        }.toSet
+    val widened: Set[String] = zoneSchema.toSeq.flatMap(_.fields).flatMap { zf =>
+      updates.schema.fields.find(_.name == zf.name).flatMap { uf =>
+        (zf.dataType, uf.dataType) match {
+          case (a, b) if a == b => None
+          case (IntegerType, LongType) => Some(zf.name) // widen the zone
+          case (LongType, IntegerType) => None // older-schema batch: coerces up
+          case (a, b) => throw new IllegalStateException(
+            s"CompactedZone: column '${zf.name}' retype $a -> $b is not a " +
+              "merge — only int->long widening evolves in place; " +
+              "narrowing or cross-family retypes are a zone REBUILD and " +
+              "must be an explicit operator decision, never a silent merge")
+        }
       }
+    }.toSet
     // ADVICE r14 low #4: the widening swap's crash-recovery contract (an
     // ABSENT zone, rebuilt by ensureCompacted from the raw zone) does NOT
     // compose with a checkpointed streaming caller — the stream's
@@ -371,10 +461,7 @@ object CompactedZone {
     val base: Option[DataFrame] = {
       val present = existingBuckets.toSet.intersect(touched.toSet)
       if (present.isEmpty) None
-      // mergeSchema: after an additive-column merge (below) bucket files
-      // can carry heterogeneous schemas; the union of all file schemas is
-      // the zone's schema, exactly Delta/Iceberg's additive-evolution rule
-      else Some(spark.read.option("mergeSchema", "true").parquet(dir)
+      else Some(scanZone(spark, dir, zoneSchema)
         .filter(col("bucket").isin(present.toSeq.map(Integer.valueOf): _*)))
     }
     // latest-wins within the batch too (a streaming batch can carry the
@@ -388,34 +475,41 @@ object CompactedZone {
     // Delta/Iceberg additive rule — declared drops are metadata-only via
     // `drops`, int→long widening rewrites in place below, everything else
     // throws). Pinned in CompactionSpec.
+    //
+    // ONE shuffle: `bucket` is a function of `id`, so ranking within
+    // (bucket, id) over input hash-partitioned by `bucket` is ranking per
+    // id, and the write inherits that partitioning — each bucket lands in
+    // one task, one file per bucket dir. AQE still coalesces the shuffle's
+    // partitions (a fixed NumBuckets-wide write measured slower).
     val merged = EtlOps.latestPerKey(
-      base.fold(updates)(_.unionByName(updates, allowMissingColumns = true)),
-      Seq(col("id")), Seq(col("extracted_at")))
+      base.fold(updates)(_.unionByName(updates, allowMissingColumns = true))
+        .repartition(col("bucket")),
+      Seq(col("bucket"), col("id")), Seq(col("extracted_at")))
+    val schema = nextSchema(zoneSchema, merged.schema, widened)
 
     // write-to-temp + swap: Spark refuses to overwrite a path that feeds
     // the plan being written, and rightly so — the temp dir makes the
     // merge all-or-nothing per bucket
     val tmp = dir + ".tmp-merge"
-    merged
-      .repartition(col("bucket")) // one file per bucket dir, not tasks × buckets
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
     if (widened.isEmpty) {
+      if (!stored.contains(schema)) commitFile(zone, SchemaFile, schema.json)
       // per-bucket swap — atomic per bucket; a crash mid-loop leaves some
       // buckets updated and some not, which is SAFE here: the snapshot is
       // not yet recorded in _GRAFT_MERGED, and latest-wins makes the replay
       // idempotent (every file is schema-compatible with every other)
       touched.foreach { b =>
-        val dst = new java.io.File(zone, s"bucket=$b")
-        val src = new java.io.File(tmp, s"bucket=$b")
+        val dst = new File(zone, s"bucket=$b")
+        val src = new File(tmp, s"bucket=$b")
         if (src.isDirectory) {
           if (dst.isDirectory) {
             Option(dst.listFiles()).foreach(_.foreach(_.delete()))
             dst.delete()
           }
-          java.nio.file.Files.move(src.toPath, dst.toPath)
+          Files.move(src.toPath, dst.toPath)
         }
       }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+      org.apache.commons.io.FileUtils.deleteQuietly(new File(tmp))
     } else {
       // ZONE-GRANULARITY swap for the widening rewrite (ADVICE r13,
       // medium): the per-bucket loop is NOT safe here — a crash mid-loop
@@ -424,22 +518,23 @@ object CompactedZone {
       // staleness check never auto-rebuilds: the zone is bricked until
       // manually deleted. The widened rewrite covers every bucket anyway,
       // so commit it as ONE directory swap: carry the zone's metadata
-      // files (_GRAFT_MERGED / _GRAFT_SRC) into the temp dir, move the old
-      // zone aside, move the temp in, drop the old. Either rename is
-      // atomic; a crash between them leaves NO zone dir at the path, which
-      // ensureCompacted treats as empty and rebuilds from the raw zone —
-      // self-healing, never a torn mixed-type state.
-      val tmpDir = new java.io.File(tmp)
+      // files (_GRAFT_MERGED / _GRAFT_SRC / the rest) into the temp dir
+      // with the widened _GRAFT_SCHEMA, move the old zone aside, move the
+      // temp in, drop the old. Either rename is atomic; a crash between
+      // them leaves NO zone dir at the path, which ensureCompacted treats
+      // as empty and rebuilds from the raw zone — self-healing, never a
+      // torn mixed-type state.
+      val tmpDir = new File(tmp)
       Option(zone.listFiles()).toSeq.flatten.filter(_.isFile).foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(tmpDir, f.getName).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        Files.copy(f.toPath, new File(tmpDir, f.getName).toPath,
+          StandardCopyOption.REPLACE_EXISTING)
       }
-      val old = new java.io.File(dir + ".old-widen")
+      commitFile(tmpDir, SchemaFile, schema.json)
+      val old = new File(dir + ".old-widen")
       org.apache.commons.io.FileUtils.deleteQuietly(old)
-      java.nio.file.Files.move(zone.toPath, old.toPath)
+      Files.move(zone.toPath, old.toPath)
       widenSwapHook() // test seam: the crash window between the renames
-      java.nio.file.Files.move(tmpDir.toPath, zone.toPath)
+      Files.move(tmpDir.toPath, zone.toPath)
       org.apache.commons.io.FileUtils.deleteQuietly(old)
     }
     touched
@@ -460,36 +555,34 @@ object CompactedZone {
   def ensureCompacted(spark: SparkSession, sfDir: String): String = {
     val rawDir = RawZone.ensureBuilt(spark, sfDir)
     val dir = compactedDir(sfDir)
-    val zone = new java.io.File(dir)
-    val fpFile = new java.io.File(zone, "_GRAFT_SRC")
+    val zone = new File(dir)
+    val fpFile = new File(zone, "_GRAFT_SRC")
     val srcFp = {
-      val raw = new java.io.File(rawDir, "_GRAFT_SRC")
-      if (raw.isFile) new String(java.nio.file.Files.readAllBytes(raw.toPath), "UTF-8")
+      val raw = new File(rawDir, "_GRAFT_SRC")
+      if (raw.isFile) new String(Files.readAllBytes(raw.toPath), "UTF-8")
       else "unfingerprinted"
     }
     val stale = zone.isDirectory && !(fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == srcFp)
+      new String(Files.readAllBytes(fpFile.toPath), "UTF-8") == srcFp)
     if (stale) org.apache.commons.io.FileUtils.deleteQuietly(zone)
     // sweep staging debris a crashed merge/widening may have left (the
     // recovery contract: a crash leaves an absent-or-valid zone plus
     // SIBLING litter, never a torn zone — the litter dies here)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir + ".tmp-merge"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir + ".old-widen"))
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(dir + ".tmp-merge"))
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(dir + ".old-widen"))
     zone.mkdirs()
 
-    val merged = readState(zone)
+    val merged = readState(zone).toSet
     val pending = rawSnapshots(rawDir).filterNot(merged.contains)
-    // one merge job per arriving snapshot — the incremental contract; a
+    // one merge per arriving snapshot — the incremental contract; a
     // backlog replays in arrival order and lands on the same answer
     if (pending.nonEmpty) ZoneBuildTally.builds.incrementAndGet()
-    pending.foldLeft(merged) { (done, snap) =>
+    pending.foreach { snap =>
       mergeSnapshot(spark, rawDir, dir, snap)
-      val now = done :+ snap
-      writeState(zone, now)
-      now
+      appendState(zone, snap)
     }
     if (!fpFile.isFile || stale)
-      java.nio.file.Files.write(fpFile.toPath, srcFp.getBytes("UTF-8"))
+      Files.write(fpFile.toPath, srcFp.getBytes("UTF-8"))
     dir
   }
 
@@ -500,9 +593,9 @@ object CompactedZone {
     */
   def compactedZoneRuns(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureCompacted(spark, sfDir)
-    // readZone: the mergeSchema scan (buckets may be heterogeneous after
-    // additive evolution) under the LOGICAL schema (column-mapping
-    // renames applied); the projection below pins the contract columns
+    // readZone: the scan under the committed physical schema, presented
+    // under the LOGICAL schema (column-mapping renames applied); the
+    // projection below pins the contract columns
     readZone(spark, dir)
       .select(col("id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("id"))

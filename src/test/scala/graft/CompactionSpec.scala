@@ -1,20 +1,97 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{CompactedZone, RawZone}
+import graft.pipeline.{CompactedZone, RawZone, ZoneBuildTally}
 
 /** Incremental MERGE-style compaction (VERDICT r9 item 4): the compacted
   * zone must equal the full recompute while reading only NEW snapshot
   * partitions and rewriting only TOUCHED buckets.
   */
-class CompactionSpec extends AnyFunSuite with SparkFixture {
+class CompactionSpec extends AnyFunSuite with SparkFixture
+    with AdaptiveSparkPlanHelper {
 
   private def freshZone(): String = {
     val dir = CompactedZone.compactedDir(sf0001)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     dir
+  }
+
+  /** The Spark work `body` runs: per job, the names of its stages' RDDs;
+    * and the executed plan of every query execution.
+    */
+  private def recordSpark(body: => Unit): (Seq[Seq[String]], Seq[SparkPlan]) = {
+    val sc = spark.sparkContext
+    GraftListenerBus.drain(sc)
+    val jobs = new ConcurrentLinkedQueue[Seq[String]]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(js.stageInfos.flatMap(_.rddInfos.map(_.name)))
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      body
+      GraftListenerBus.drain(sc)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    (jobs.asScala.toSeq, plans.asScala.toSeq)
+  }
+
+  /** The zone read under its committed schema equals the footer-inferring
+    * `mergeSchema` read: the same physical schema, and `readZone` the same
+    * rows as the inferred scan under the zone's renames and drops.
+    */
+  private def assertStoredSchemaReads(dir: String): Unit = {
+    val stored = CompactedZone.readSchema(dir)
+    assert(stored.isDefined, "a merge must commit the zone's schema")
+    val inferred = spark.read.option("mergeSchema", "true").parquet(dir)
+    assert(spark.read.schema(stored.get).parquet(dir).schema === inferred.schema,
+      "the committed schema must be the one a mergeSchema scan infers")
+    val renames = CompactedZone.readRenames(dir)
+    val drops = CompactedZone.readDrops(dir)
+    val want = inferred.select(inferred.columns.toSeq.filterNot(drops)
+      .map(p => col(p).as(renames.getOrElse(p, p))): _*)
+    val got = CompactedZone.readZone(spark, dir)
+    assert(got.schema === want.schema)
+    def rows(df: DataFrame) = df.orderBy("id").collect().toSeq
+    assert(rows(got) === rows(want))
+  }
+
+  /** Lands a fabricated snapshot of `runs` (id, value) in the raw zone;
+    * returns its directory, which the caller deletes.
+    */
+  private def landSnapshot(snap: String, runs: Seq[(Long, Double)]): File = {
+    val repoDir = new File(s"${RawZone.rawZoneDir(sf0001)}/repo=click/extracted_at=$snap")
+    repoDir.mkdirs()
+    val json = runs.map { case (i, v) =>
+      s"""{"id":$i,"type":"click","value":$v,"user":{"id":7}}""" }
+    Files.write(new File(repoDir, "part-late.txt").toPath,
+      s"""{"workflow_runs":[${json.mkString(",")}]}\n""".getBytes("UTF-8"))
+    repoDir
   }
 
   test("incremental compaction equals the full recompute, snapshot by snapshot") {
@@ -45,12 +122,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
     // fabricate a third snapshot touching exactly two run ids -> ≤ 2 buckets
     val ids = Seq(12L, 17L)
     val snap = "20240103-000000Z"
-    val repoDir = new java.io.File(s"$rawDir/repo=click/extracted_at=$snap")
-    repoDir.mkdirs()
-    val runs = ids.map(i =>
-      s"""{"id":$i,"type":"click","value":9999.0,"user":{"id":7}}""")
-    java.nio.file.Files.write(new java.io.File(repoDir, "part-late.txt").toPath,
-      s"""{"workflow_runs":[${runs.mkString(",")}]}\n""".getBytes("UTF-8"))
+    val repoDir = landSnapshot(snap, ids.map(i => (i, 9999.0)))
     try {
       val untouched = (0 until CompactedZone.NumBuckets).toSet --
         ids.map(i => (i % CompactedZone.NumBuckets).toInt).toSet
@@ -156,8 +228,12 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       // ensureCompacted would see a fingerprintless zone and re-merge
       // everything
       assert(new java.io.File(dir, "_GRAFT_MERGED").isFile &&
-        new java.io.File(dir, "_GRAFT_SRC").isFile,
+        new java.io.File(dir, "_GRAFT_SRC").isFile &&
+        new java.io.File(dir, "_GRAFT_SCHEMA").isFile,
         "zone metadata files must survive the widening swap")
+      assert(CompactedZone.readSchema(dir).get("score").dataType ===
+        org.apache.spark.sql.types.LongType,
+        "the committed schema must carry the widened type")
       assert(!new java.io.File(dir + ".old-widen").exists() &&
         !new java.io.File(dir + ".tmp-merge").exists(),
         "the swap must clean up its staging directories")
@@ -499,15 +575,18 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (12L, 7L, "click", 1.0, "20240104-000000Z", 5))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaReads(dir)
       // WIDEN: re-declared long
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (17L, 7L, "click", 2.0, "20240105-000000Z", 6L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaReads(dir)
       // RENAME: score -> points (metadata-only, post-widening)
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (19L, 7L, "click", 3.0, "20240106-000000Z", 7L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "points")),
         renames = Map("score" -> "points"))
+      assertStoredSchemaReads(dir)
       val t1 = CompactedZone.readZone(spark, dir)
       assert(t1.filter(col("id") === 12L).select("points").first().getLong(0) === 5L,
         "widened-then-renamed history must read under the new name at the wide type")
@@ -516,12 +595,14 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         (23L, 7L, "click", 4.0, "20240107-000000Z"))
         .toDF("id", "user_id", "event_type", "value", "extracted_at")),
         drops = Seq("points"))
+      assertStoredSchemaReads(dir)
       assert(!CompactedZone.readZone(spark, dir).columns.contains("points"))
       // RE-ADD under the ORIGINAL name 'score' — physical 'score' is
       // tombstoned, so the reborn column must NOT resurrect 5/6/7
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (29L, 7L, "click", 5.0, "20240108-000000Z", 9L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaReads(dir)
       val t2 = CompactedZone.readZone(spark, dir)
       val vals = t2.filter(col("id").isin(12L, 17L, 19L, 29L))
         .select(col("id"), col("score")).collect()
@@ -533,6 +614,100 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       assert(runs.columns.toSeq === Seq("id", "user_id", "event_type", "value"))
       assert(runs.count() > 0)
     } finally freshZone()
+  }
+
+  test("merging one snapshot into a populated zone runs at most 3 Spark " +
+      "jobs, none of them a schema merge, and writes through one Exchange") {
+    freshZone()
+    val dir = CompactedZone.ensureCompacted(spark, sf0001)
+    val rawDir = RawZone.rawZoneDir(sf0001)
+    val snap = "20240103-000000Z"
+    // a re-extraction touching every bucket, like a scheduled refetch
+    val ids = 1L to 40L
+    val repoDir = landSnapshot(snap, ids.map(i => (i, 9000.0 + i)))
+    try {
+      val (jobs, plans) = recordSpark {
+        CompactedZone.mergeSnapshot(spark, rawDir, dir, snap)
+        CompactedZone.readZone(spark, dir)
+      }
+      assert(jobs.size <= 3, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+      // a mergeSchema footer read is Spark's parallelized file-status job
+      assert(!jobs.exists(_.contains("ParallelCollectionRDD")),
+        s"a schema-merge job ran: ${jobs.mkString("; ")}")
+      val writes = plans.filter(p => collect(p) { case w: DataWritingCommandExec => w }.nonEmpty)
+      assert(writes.size === 1)
+      val exchanges = collect(writes.head) { case e: ShuffleExchangeLike => e }
+      assert(exchanges.size === 1, s"write plan:\n${writes.head.treeString}")
+      val vals = CompactedZone.readZone(spark, dir)
+        .filter(col("id").isin(ids.map(Long.box): _*))
+        .select(col("id"), col("value")).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet
+      assert(vals === ids.map(i => (i, 9000.0 + i)).toSet)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(repoDir)
+      freshZone()
+    }
+  }
+
+  test("a torn last line of _GRAFT_MERGED counts as not merged: the snapshot " +
+      "merges again and the zone still equals the full recompute") {
+    freshZone()
+    val dir = CompactedZone.ensureCompacted(spark, sf0001)
+    try {
+      val state = new File(dir, "_GRAFT_MERGED").toPath
+      val whole = new String(Files.readAllBytes(state), "UTF-8")
+      val lines = whole.split('\n').toSeq
+      assert(lines.size >= 2 && whole.endsWith("\n"))
+      // a crash mid-append: the last snapshot's line lost its tail
+      Files.write(state, (lines.init.map(_ + "\n").mkString + lines.last.take(5))
+        .getBytes("UTF-8"))
+      val builds = ZoneBuildTally.builds.get()
+      val got = CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq
+      assert(ZoneBuildTally.builds.get() === builds + 1,
+        "the snapshot on the torn line must merge again")
+      assert(new String(Files.readAllBytes(state), "UTF-8") === whole,
+        "the fragment must be cut and the snapshot appended on a clean line")
+      assert(got === RawZone.pipelineRuns(spark, sf0001).collect().toSeq)
+    } finally freshZone()
+  }
+
+  test("a zone without _GRAFT_SCHEMA, as older code wrote it, reads " +
+      "correctly and gets the file on its next merge") {
+    freshZone()
+    val dir = CompactedZone.ensureCompacted(spark, sf0001)
+    try {
+      import spark.implicits._
+      val schemaFile = new File(dir, "_GRAFT_SCHEMA")
+      assert(schemaFile.isFile)
+      val want = CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq
+      assert(schemaFile.delete())
+      assert(CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq === want)
+      CompactedZone.mergeUpdates(spark, dir, Seq(
+        (12L, 7L, "click", 4242.0, "20240104-000000Z"))
+        .toDF("id", "user_id", "event_type", "value", "extracted_at")
+        .withColumn("bucket",
+          pmod(col("id"), lit(CompactedZone.NumBuckets)).cast("int")))
+      assert(schemaFile.isFile, "the next merge must commit the schema")
+      assertStoredSchemaReads(dir)
+      assert(CompactedZone.readZone(spark, dir).filter(col("id") === 12L)
+        .select("value").first().getDouble(0) === 4242.0)
+    } finally freshZone()
+  }
+
+  test("the touched-bucket collect finds a batch's buckets, and fails " +
+      "loudly when the bucket count outgrows its 64-bit mask or a bucket id " +
+      "leaves its range") {
+    import spark.implicits._
+    val batch = Seq((1L, 3), (2L, 5), (3L, 3)).toDF("id", "bucket")
+    assert(CompactedZone.touchedBuckets(batch) === Seq(3, 5))
+    val wide = intercept[IllegalStateException] {
+      CompactedZone.touchedBuckets(batch, numBuckets = 65)
+    }
+    assert(wide.getMessage.contains("mask"))
+    val outside = intercept[Exception] {
+      CompactedZone.touchedBuckets(Seq((1L, CompactedZone.NumBuckets)).toDF("id", "bucket"))
+    }
+    assert(outside.getMessage.contains("outside"))
   }
 
   test("streaming compaction: micro-batched foreachBatch merges equal the " +
